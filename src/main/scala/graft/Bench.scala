@@ -8,9 +8,10 @@ import graft.queries.Registry
   *
   * Harness hygiene (round-4 postmortem: a 16-query x 6-run loop in one JVM
   * inflated later queries 4-26x over their cold standalone times):
-  *  - the whole-stage-codegen class cache is raised from its 100-entry LRU
-  *    default to 1000 so one query's compiles never evict another's — the
-  *    eviction churn (recompile per iteration) was the main decay source;
+  *  - the session comes from `GraftSession.configure`, which raises the
+  *    generated-class cache from its 100-entry LRU default to 1000 so one
+  *    query's compiles never evict another's — the eviction churn
+  *    (recompile per iteration) was the main decay source;
   *  - each query warms immediately before its own timed iterations (same
   *    plan shape at the smallest SF), so the cache is hot per query no
   *    matter how many queries precede it;
@@ -41,7 +42,6 @@ object Bench {
     val spark = GraftSession.configure(
       SparkSession.builder().master(s"local[$cpus]"),
       shufflePartitions = shuffleParts)
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")

@@ -36,5 +36,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // SQL:2011 grand-total row for ROLLUP/CUBE over empty input (post-hoc:
     // runs once, after grouping sets are lowered to Aggregate-over-Expand)
     e.injectPostHocResolutionRule(_ => RollupEmptyGlobalRow)
+    // primitive literals of code-generated operators read from the
+    // generated class's references: statements differing only in their
+    // constants share compiled classes (ParameterizeLiterals)
+    e.injectColumnar(_ => ParameterizeLiterals.columnarRule)
   }
 }

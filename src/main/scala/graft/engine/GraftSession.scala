@@ -44,6 +44,14 @@ object GraftSession {
       // applicable, and the DuckDB oracle agrees (it treats naive parquet
       // timestamps the same way).
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      // Spark's generated-class cache (an LRU of 100 by default) holds one
+      // entry per distinct generated source. ParameterizeLiterals makes that
+      // one per plan SHAPE rather than per constant, so the cap bounds the
+      // shapes a session keeps compiled; at 100 a dozen statement templates
+      // already evict each other. A STATIC setting: it takes effect only
+      // when this builder creates the SparkContext — sessions that
+      // `prepare` adopts from an existing context keep Spark's 100.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.ui.enabled", "false")
 
   /** Session shuffle width for a dataset of `dataBytes` on-disk parquet:

@@ -148,6 +148,12 @@ private[graft] object WriterLock {
     while (!acquired) {
       try { tryAcquire(); acquired = true }
       catch {
+        // a missing parent directory is no contention: waiting cannot
+        // create it, so fail now instead of after the full waitMs
+        case e: java.nio.file.NoSuchFileException =>
+          throw new java.io.FileNotFoundException(
+            s"index writer lock at $path.lock cannot be created: its parent " +
+              s"directory ${lock.getParent} does not exist").initCause(e)
         case _: java.io.IOException if System.currentTimeMillis() < deadline =>
           tryTakeover()
           Thread.sleep(200)

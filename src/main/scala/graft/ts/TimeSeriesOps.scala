@@ -277,18 +277,21 @@ object TimeSeriesOps {
   private[ts] val SmallGrid = 10000L
 
   /** Statically evaluate a timestamp Column to epoch micros when it is a
-    * literal expression (all TQL/SQL surfaces produce literals). Resolution +
-    * constant folding run driver-side on a one-row plan — no job is executed.
-    * Non-foldable columns yield None. */
+    * constant expression (all TQL/SQL surfaces produce literals): a one-row
+    * plan is analyzed and its resolved expression evaluated driver-side — no
+    * optimizer pass, no job. A column that is not foldable or evaluates to
+    * null yields None. */
   private def staticUs(spark: org.apache.spark.sql.SparkSession,
                        c: Column): Option[Long] =
     try {
-      import org.apache.spark.sql.catalyst.expressions.{Alias, Literal => CLit}
-      import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
-      spark.range(1).select(unix_micros(c)).queryExecution.optimizedPlan match {
-        case l: LocalRelation =>
-          l.data.headOption.collect { case r if !r.isNullAt(0) => r.getLong(0) }
-        case Project(Seq(Alias(CLit(v: Long, _), _)), _) => Some(v)
+      import org.apache.spark.sql.catalyst.expressions.Alias
+      import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
+      import org.apache.spark.sql.catalyst.plans.logical.Project
+      // runtime-replaceable forms (to_timestamp & co) evaluate only once
+      // replaced: one optimizer rule, not the whole optimizer
+      ReplaceExpressions(spark.range(1).select(unix_micros(c)).queryExecution.analyzed) match {
+        case Project(Seq(Alias(e, _)), _) if e.foldable =>
+          Option(e.eval()).map(_.asInstanceOf[Long])
         case _ => None
       }
     } catch { case scala.util.control.NonFatal(_) => None }

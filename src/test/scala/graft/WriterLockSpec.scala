@@ -165,4 +165,18 @@ class WriterLockSpec extends graft.SparkTestBase {
       assert(!Files.exists(Paths.get(s"$path.lock")))
     }
   }
+
+  test("a missing parent directory fails fast instead of waiting out waitMs") {
+    val path = Files.createTempDirectory("graft_lock_noparent").toString + "/missing/idx"
+    val t0 = System.currentTimeMillis()
+    var ran = false
+    val e = intercept[java.io.FileNotFoundException] {
+      WriterLock.withLock(spark, path, waitMs = 30000L) { ran = true }
+    }
+    val waited = System.currentTimeMillis() - t0
+    assert(!ran)
+    assert(waited < 5000L, s"should fail at once, waited ${waited}ms")
+    assert(e.getMessage.contains("does not exist"), e.getMessage)
+    assert(!e.getMessage.contains("concurrent writer"), e.getMessage)
+  }
 }
