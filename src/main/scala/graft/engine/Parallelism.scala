@@ -39,10 +39,9 @@ import org.apache.spark.sql.DataFrame
   * minhash's.
   */
 object Parallelism {
-  private val disabled = sys.env.get("SPARK_GRAFT_NO_SPREAD").contains("1")
   private val FloorBytes = 32L * 1024 * 1024
   def spread(df: DataFrame): DataFrame = {
-    if (disabled || df.isStreaming) return df
+    if (df.isStreaming) return df
     val sc = df.sparkSession.sparkContext
     val p = sc.defaultParallelism
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes

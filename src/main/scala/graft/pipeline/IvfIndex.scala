@@ -1,7 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.util.concurrent.TimeoutException
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.concurrent.Await
+import scala.concurrent.duration.{DurationInt, FiniteDuration}
 
 /** Persisted IVF index: build ONCE (centroids + cluster-partitioned
   * vectors on disk), query MANY times without re-clustering the corpus.
@@ -286,25 +289,13 @@ object IvfIndex {
       // written frame ONLY: an Observation binds to the first action that
       // executes its node, and the null-partition probe above runs a
       // limit(1) that must not capture a partial count.
-      val obs = org.apache.spark.sql.Observation(
-        "graft_append_" + java.util.UUID.randomUUID())
+      val obs = Observation("graft_append_" + java.util.UUID.randomUUID())
       payload.observe(obs, count(lit(1)).as("n"))
         .repartition(col("cluster"))
         .write.mode("append").option("compression", "zstd")
         .partitionBy("cluster" +: attrParts: _*)
         .parquet(s"$root/vectors")
-      // bounded wait (r19 ADVICE): Observation.get blocks forever if a
-      // sink ever stops delivering observed metrics — poll briefly, then
-      // degrade to the pre-r18 extra-count behavior instead of hanging
-      // the append under the writer lock.
-      val n = try {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        Await.result(Future(obs.get("n").asInstanceOf[Long]),
-          scala.concurrent.duration.Duration(10, "s"))
-      } catch {
-        case _: java.util.concurrent.TimeoutException => batch.count()
-      }
+      val n = observedCount(obs, 10.seconds)(batch.count())
       if (tag != null)
         IngestMarkers.writeAppliedMarkerAt(batch.select("id"), root, tag)
       val newAppended = appended + n
@@ -318,6 +309,16 @@ object IvfIndex {
         fraction
       }
   }
+
+  /** The `n` metric `obs` delivers, waiting at most `timeout` on its
+    * future (r19 ADVICE): a sink that never delivers observed metrics
+    * degrades to the pre-r18 extra count, `fallback`, instead of hanging
+    * the append under the writer lock. The wait runs on the caller's
+    * thread, so a timeout leaves no thread blocked in `Observation.get`. */
+  private[graft] def observedCount(obs: Observation, timeout: FiniteDuration)(
+      fallback: => Long): Long =
+    try Await.result(obs.future, timeout).getAs[Long]("n")
+    catch { case _: TimeoutException => fallback }
 
   /** Appended-since-build fraction of the index at `path`. */
   def appendedFraction(spark: SparkSession, path: String): Double = {

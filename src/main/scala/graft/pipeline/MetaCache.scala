@@ -37,7 +37,7 @@ private[pipeline] object MetaCache {
       fs.listStatus(p)
         .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
         .sorted.mkString(";")
-    } catch { case _: java.io.IOException => null }
+    } catch { case scala.util.control.NonFatal(_) => null }
 
   /** `load` the value for `dir` once per on-disk write of it. */
   def cached[A <: AnyRef](spark: SparkSession, dir: String)(load: => A): A = {

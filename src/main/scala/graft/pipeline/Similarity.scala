@@ -450,14 +450,10 @@ object Similarity {
     * of the survivors; with rerank off it is the cosine against the
     * reconstructed vector (null on zero-norm, matching graft_cosine's
     * contract, so degenerate rows sort last not first). */
-  /** `useFusedAdc = false` keeps the retired interpreted HOF score form
-    * alive for differential probing only (ProbePqAdc — the BpeDiff
-    * discipline for new fast paths); production callers never pass it. */
   def pqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
              vecCol: String, k: Int, m: Int = 8, kCodes: Int = 16,
              steps: Int = 4, rerank: Int = -1,
-             roundTo: Int = 4, trainFraction: Double = 1.0,
-             useFusedAdc: Boolean = true): DataFrame = {
+             roundTo: Int = 4, trainFraction: Double = 1.0): DataFrame = {
     ensureFns(corpus)
     val c0 = spread(corpus).select(col(idCol).as("c_id"), asDouble(col(vecCol)).as("cv"))
     val dim = vecDim(c0, "cv")
@@ -500,13 +496,7 @@ object Similarity {
     // fused m-lookup ADC sum (functions/PqAdc) — bit-identical to the
     // interpreted aggregate(zip_with(..element_at..)) fold it replaced
     // (left-to-right, null on null code / out-of-range index)
-    val ip =
-      if (useFusedAdc)
-        call_function("graft_pq_adc", col("codes"), col("lut"), lit(kCodes))
-      else aggregate(
-        zip_with(col("codes"), sequence(lit(0), lit(m - 1)),
-          (code, j) => element_at(col("lut"), j * kCodes + code + 1)),
-        lit(0.0), (acc, x) => acc + x)
+    val ip = call_function("graft_pq_adc", col("codes"), col("lut"), lit(kCodes))
     // zero-norm guard: a zero query vector or a zero-norm reconstruction
     // must score null (sorts LAST under desc), not NaN (which Spark sorts
     // FIRST and would pin the degenerate row at rk=1 for every query) —

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 class FunctionsSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -156,5 +158,26 @@ class FunctionsSpec extends SparkTestBase {
       .head().getLong(0)
     assert(math.abs(est - exact).toDouble / exact <= 0.03,
       s"HLL estimate $est vs exact $exact")
+  }
+
+  test("a session built with withExtensions(GraftExtensions) alone resolves graft functions") {
+    // every other spec session comes from GraftSession.local, which also
+    // registers the functions by hand; here the extension is the only
+    // wiring (the platform-owned-session deployment shape)
+    val sql = "SELECT graft_cosine(array(1.0d, 0.0d), array(1.0d, 1.0d)) AS c, " +
+      "hex_to_dec('ff') AS h"
+    val (active, default) = (SparkSession.getActiveSession, SparkSession.getDefaultSession)
+    try {
+      val bare = SparkSession.builder().create()
+      intercept[org.apache.spark.sql.AnalysisException](bare.sql(sql).collect())
+      val ext = SparkSession.builder()
+        .withExtensions(new graft.engine.GraftExtensions).create()
+      val r = ext.sql(sql).collect()(0)
+      assert(math.abs(r.getDouble(0) - 1.0 / math.sqrt(2.0)) < 1e-12)
+      assert(r.getLong(1) == 255L)
+    } finally {
+      active.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+      default.fold(SparkSession.clearDefaultSession())(SparkSession.setDefaultSession)
+    }
   }
 }

@@ -404,4 +404,22 @@ class IvfIndexSpec extends SparkTestBase {
     assert(inferred != StringType,
       "fixture no longer triggers inference drift; pick labels that do")
   }
+
+  test("append count: an Observation that never delivers falls back after the bounded wait, leaving no blocked thread") {
+    import scala.concurrent.duration.DurationInt
+    import scala.jdk.CollectionConverters._
+    val delivered = org.apache.spark.sql.Observation("graft_spec_delivered")
+    spark.range(7).observe(delivered, count(lit(1)).as("n")).collect()
+    assert(IvfIndex.observedCount(delivered, 10.seconds)(-1L) == 7L)
+
+    // never attached to a plan: its future never completes
+    val stranded = org.apache.spark.sql.Observation("graft_spec_stranded")
+    assert(IvfIndex.observedCount(stranded, 200.millis)(42L) == 42L)
+    val blocked = Thread.getAllStackTraces.asScala.collect {
+      case (t, stack) if t.isAlive && stack.exists(f =>
+          f.getClassName == "org.apache.spark.sql.Observation" &&
+            f.getMethodName.startsWith("get")) => t.getName
+    }
+    assert(blocked.isEmpty, s"threads left blocked in Observation.get: ${blocked.mkString(", ")}")
+  }
 }

@@ -89,4 +89,19 @@ class RegistrySpec extends SparkTestBase {
     }
     assert(err.getMessage.contains("q_dedup_embedding"))
   }
+
+  test("graft.tools holds exactly the tools README's Tools list documents") {
+    val src = scala.io.Source.fromFile("README.md", "UTF-8")
+    val readme = try src.getLines().toList finally src.close()
+    val listed = readme.dropWhile(_ != "## Tools").drop(1)
+      .takeWhile(!_.startsWith("## "))
+      .collect { case l if l.startsWith("- `") => l.drop(3).takeWhile(_ != '`') }
+      .toSet
+    val files = new java.io.File("src/main/scala/graft/tools").listFiles()
+      .map(_.getName).filter(_.endsWith(".scala")).map(_.stripSuffix(".scala")).toSet
+    assert(listed.nonEmpty, "README.md has no \"## Tools\" list")
+    assert(files == listed,
+      s"undocumented tools: ${(files -- listed).toSeq.sorted.mkString(", ")}; " +
+        s"documented but missing: ${(listed -- files).toSeq.sorted.mkString(", ")}")
+  }
 }
